@@ -5,10 +5,12 @@ Re-expresses the reference's TF feature-column + Keras path as a Spark ML
 distributed scoring are engine-native:
 
 - M1 numeric features  -> VectorAssembler over num_col (tasks.py:275-276)
-- M2 categorical one-hot -> StringIndexer(handleInvalid="keep") + OneHotEncoder
-  per categorical. The reference's loop quirk only encodes the LAST
-  categorical (tasks.py:278-288); we encode all 10 as its README declares —
-  documented divergence (SURVEY.md §2.6).
+- M2 categorical one-hot -> ONE multi-column StringIndexer(handleInvalid="keep")
+  + OneHotEncoder over every categorical: one fit job and one saved stage,
+  where a per-column indexer costs a job and a stage directory each. The
+  reference's loop quirk only encodes the LAST categorical (tasks.py:278-288);
+  we encode all 10 as its README declares — documented divergence
+  (SURVEY.md §2.6).
 - M3 train/val split   -> df.randomSplit([0.8, 0.2], seed) (tasks.py:290)
 - M5 training          -> LogisticRegression (binary, sigmoid probability
   output — rate-level parity with the unseeded Keras net, tasks.py:300-332;
@@ -16,6 +18,9 @@ distributed scoring are engine-native:
 - M6 scoring           -> model.transform + vector_to_array → Y_hat DOUBLE
   (tasks.py:374-385), fully distributed, no Python in the loop
 - M7 metrics           -> training summary dict (tasks.py:332-342)
+- S7 artifact          -> the fitted pipeline is written ONCE, to the
+  caller's model directory, and loaded back from it (which also sheds the
+  training summary; see save_without_summary)
 """
 
 from __future__ import annotations
@@ -44,33 +49,29 @@ def build_pipeline(
     vocabulary-list encoding would OOV them to zeros — same spirit)."""
     cat_cols = CAT_COLS if cat_cols is None else cat_cols
     num_cols = NUM_COLS if num_cols is None else num_cols
-    stages = []
-    for c in cat_cols:
-        stages.append(
-            StringIndexer(inputCol=c, outputCol=f"{c}__idx", handleInvalid="keep")
-        )
-    stages.append(
+    stages = [
+        StringIndexer(
+            inputCols=cat_cols,
+            outputCols=[f"{c}__idx" for c in cat_cols],
+            handleInvalid="keep",
+        ),
         OneHotEncoder(
             inputCols=[f"{c}__idx" for c in cat_cols],
             outputCols=[f"{c}__oh" for c in cat_cols],
             handleInvalid="keep",
-        )
-    )
-    stages.append(
+        ),
         VectorAssembler(
             inputCols=num_cols + [f"{c}__oh" for c in cat_cols],
             outputCol="features",
             handleInvalid="keep",
-        )
-    )
-    stages.append(
+        ),
         LogisticRegression(
             featuresCol="features",
             labelCol=label_col,
             maxIter=max_iter,
             probabilityCol="probability",
-        )
-    )
+        ),
+    ]
     return Pipeline(stages=stages)
 
 
@@ -84,19 +85,13 @@ def _impute_numeric(df: DataFrame, num_cols: list[str]) -> DataFrame:
     return df.fillna(0.0, subset=present) if present else df
 
 
-def _reload_without_summary(model: PipelineModel) -> PipelineModel:
-    """Round-trip the fitted pipeline through disk so the returned model
-    carries no training summary (summaries reference the SparkSession and
-    poison closure serialization; see train_model)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pb_etl_spark_model_")
-    try:
-        model.write().overwrite().save(tmp)
-        return PipelineModel.load(tmp)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def save_without_summary(model: PipelineModel, path: str) -> PipelineModel:
+    """Write the fitted pipeline to ``path`` and return it loaded back from
+    there: the loaded model carries no training summary (summaries
+    reference the SparkSession and poison closure serialization; see
+    train_model)."""
+    model.write().overwrite().save(path)
+    return PipelineModel.load(path)
 
 
 def _auc(model: PipelineModel, df: DataFrame, label_col: str) -> float:
@@ -115,16 +110,18 @@ def _auc(model: PipelineModel, df: DataFrame, label_col: str) -> float:
 
 def train_model(
     train_df: DataFrame,
+    model_path: str,
     seed: int = DEFAULT_SEED,
     val_fraction: float = 0.2,
     **pipeline_kwargs,
 ) -> tuple[PipelineModel, dict]:
-    """M3+M5: split, fit, and report metrics. The val split mirrors the
-    reference's sklearn train_test_split(test_size=0.2) (tasks.py:290) but
-    seeded — determinism is a feature the reference lacks. Both splits are
-    cached: every metric action would otherwise re-execute the full
-    upstream plan (and could even observe a different split under
-    nondeterministic partition order)."""
+    """M3+M5+S7: split, fit, save the model to ``model_path`` and report
+    metrics; returns the model as loaded back from there. The val split
+    mirrors the reference's sklearn train_test_split(test_size=0.2)
+    (tasks.py:290) but seeded — determinism is a feature the reference
+    lacks. Both splits are cached: every metric action would otherwise
+    re-execute the full upstream plan (and could even observe a different
+    split under nondeterministic partition order)."""
     label_col = pipeline_kwargs.get("label_col", LABEL_COL)
     num_cols = pipeline_kwargs.get("num_cols") or NUM_COLS
     train_df = _impute_numeric(train_df, num_cols)
@@ -148,9 +145,9 @@ def train_model(
         # anything in the process has used df.observe the session's
         # (lazily created, non-serializable) ObservationManager makes
         # every closure that drags the summary in fail to serialize.
-        # A save/load round-trip sheds the summary — same parameters,
-        # same predictions — and exercises the S7 artifact path.
-        model = _reload_without_summary(model)
+        # Loading the saved S7 artifact back sheds the summary — same
+        # parameters, same predictions.
+        model = save_without_summary(model, model_path)
         try:
             metrics["train_auc"] = _auc(model, train, label_col)
             metrics["val_auc"] = _auc(model, val, label_col) if n_val else None

@@ -165,9 +165,16 @@ def train_quality_model(doc: DataFrame, seed: int = 42):
     # the process (e.g. a streaming drain) the session's non-serializable
     # ObservationManager fails every closure that drags the summary in —
     # the documented Spark 4.1 trap from ml/pipeline.train_model
-    from pb_etl_spark.ml.pipeline import _reload_without_summary
+    import shutil
+    import tempfile
 
-    model = _reload_without_summary(model)
+    from pb_etl_spark.ml.pipeline import save_without_summary
+
+    tmp = tempfile.mkdtemp(prefix="pb_etl_spark_model_")
+    try:
+        model = save_without_summary(model, tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     scored = model.transform(val).select(
         "label", vector_to_array("probability").getItem(1).alias("p")
     )

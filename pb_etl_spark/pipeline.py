@@ -58,17 +58,16 @@ def _norm_denominators(spark: SparkSession, out: str, deps: dict[str, str]) -> N
 
 
 def _fit_model(spark: SparkSession, out: str, deps: dict[str, str], seed: int) -> None:
-    """FitNNModel (tasks.py:247-345): normalize train, fit the classifier,
-    save model + metrics under the salted stage directory."""
+    """FitNNModel (tasks.py:247-345): normalize train, fit the classifier;
+    train_model writes the model, this writes the metrics, both under the
+    salted stage directory."""
     train = read_parquet(spark, deps["load_data"])
     maxes = read_parquet(spark, deps["norm_denominators"])
     normalized = apply_maxabs(train, maxes, NORM_COLS)
-    model, metrics = train_model(normalized, seed=seed)
-    model.write().overwrite().save(f"{out}/{MODEL_SUBDIR}")
+    _, metrics = train_model(normalized, f"{out}/{MODEL_SUBDIR}", seed=seed)
     # metrics sidecar (reference model_hist_params, tasks.py:334-342) — a
     # plain local file: one row through a Spark job would create a
     # DIRECTORY named metrics.json that json.load can't open
-    os.makedirs(out, exist_ok=True)
     with open(os.path.join(out, METRICS_FILE), "w") as fh:
         json.dump(metrics, fh)
     # the model dir write emits its own _SUCCESS under MODEL_SUBDIR; mark
@@ -77,8 +76,6 @@ def _fit_model(spark: SparkSession, out: str, deps: dict[str, str], seed: int) -
 
 
 def _touch_success(path: str) -> None:
-    import os
-
     os.makedirs(path, exist_ok=True)
     open(os.path.join(path, "_SUCCESS"), "w").close()
 

@@ -18,11 +18,21 @@ The stage body receives (spark, out_path, dep_paths) and must write a
 dataset with a ``_SUCCESS`` flag (any ``df.write.parquet`` does). Stages
 with ``ephemeral=True`` (the reference's output-less FinalResults,
 tasks.py:428-444) always run and return a value instead of a path.
+
+Resume after a crash: the body writes into a fresh staging sibling that is
+renamed onto the salted path only once it holds ``_SUCCESS``, so a run
+killed mid-write never leaves a partial dataset where a rerun reads or
+writes; a partial directory from any other writer is removed before the
+stage re-runs. One runner per base directory at a time.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
+import shutil
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -93,12 +103,26 @@ class StageRunner:
             if dataset_exists(out):
                 self.skipped.append(stage.name)
             else:
-                stage.fn(self.spark, out, dep_paths)
-                if not dataset_exists(out):
-                    raise RuntimeError(
-                        f"stage {stage.name} did not produce a complete dataset at {out}"
-                    )
+                self._materialize(stage, out, dep_paths)
                 self.ran.append(stage.name)
             result = out
         self._results[key] = result
         return result
+
+    def _materialize(self, stage: Stage, out: str, dep_paths: dict[str, str]) -> None:
+        """Run the body into a staging sibling, then rename it onto ``out``.
+        Leftovers of an interrupted run (a staging dir, or an ``out`` with
+        no ``_SUCCESS``) are removed first."""
+        for stale in glob.glob(f"{glob.escape(out)}__staging_*") + [out]:
+            shutil.rmtree(stale, ignore_errors=True)
+        staging = f"{out}__staging_{uuid.uuid4().hex[:8]}"
+        try:
+            stage.fn(self.spark, staging, dep_paths)
+            if not dataset_exists(staging):
+                raise RuntimeError(
+                    f"stage {stage.name} did not produce a complete dataset at {out}"
+                )
+            os.rename(staging, out)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise

@@ -21,10 +21,18 @@ def read_csv_dataset(
     schema: T.StructType,
     header: bool = True,
 ) -> DataFrame:
-    """Read all ``*.csv`` files under ``path`` as one DataFrame."""
-    return (
+    """Read all ``*.csv`` files under ``path`` as one DataFrame; a
+    directory holding none is an error, as the reference's glob was."""
+    df = (
         spark.read.schema(schema)
         .option("header", str(header).lower())
         .option("mode", "PERMISSIVE")
-        .csv(f"{path.rstrip('/')}/*.csv")
+        # a filter, not a ``{path}/*.csv`` glob: Spark probes a glob path
+        # for a streaming-sink metadata dir and logs a FileNotFoundException
+        # stack trace on every read
+        .option("pathGlobFilter", "*.csv")
+        .csv(path)
     )
+    if not df.inputFiles():
+        raise FileNotFoundError(f"no *.csv files under {path}")
+    return df

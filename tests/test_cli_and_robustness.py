@@ -78,6 +78,19 @@ def test_csv_malformed_rows_degrade_to_nulls(spark, tmp_path):
     assert rows[2] is None  # PERMISSIVE: bad cell nulled, row kept
 
 
+def test_csv_dataset_without_csv_files_fails_loud(spark, tmp_path):
+    import pytest
+
+    from pb_etl_spark.sources.csv import read_csv_dataset
+
+    d = tmp_path / "ds"
+    d.mkdir()
+    (d / "notes.txt").write_text("id\n1\n")
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    with pytest.raises(FileNotFoundError, match="no \\*.csv files"):
+        read_csv_dataset(spark, str(d), schema)
+
+
 def test_success_flag_guard_refuses_partial_dataset(spark, tmp_path):
     from pb_etl_spark.sources.parquet import read_parquet, write_parquet
 

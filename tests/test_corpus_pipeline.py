@@ -115,6 +115,59 @@ def test_incomplete_stage_output_fails_loud(spark, tmp_path):
         StageRunner(spark, str(tmp_path / "wd")).run(s)
 
 
+def test_failed_stage_leaves_no_partial_output(spark, tmp_path):
+    """The body writes into a staging sibling that is renamed into place
+    only when complete: a body that dies mid-write leaves the base
+    directory empty, so the next run cannot mistake its leftovers for
+    output."""
+    import os
+
+    import pytest
+
+    from pb_etl_spark.plans.stages import Stage, StageRunner
+
+    def dying_stage(spark, out, deps):
+        spark.range(10).write.parquet(f"{out}/part")
+        raise OSError("killed mid-write")
+
+    base = tmp_path / "wd"
+    with pytest.raises(OSError, match="killed mid-write"):
+        StageRunner(spark, str(base)).run(Stage(name="dying", fn=dying_stage))
+    assert os.listdir(base) == []
+
+
+def test_resume_over_partial_stage_dir(spark, tmp_path):
+    """A crash mid-write leaves a stage directory with no _SUCCESS (here a
+    committer's _temporary/ and a stray part file). The rerun must replace
+    it, not fail with PATH_ALREADY_EXISTS or append to it, and reproduce a
+    clean run's output."""
+    import os
+
+    from pb_etl_spark.corpus_pipeline import build_corpus_pipeline, run_corpus_pipeline
+
+    clean_base = str(tmp_path / "clean")
+    clean = run_corpus_pipeline(spark, SF_DIR, clean_base)
+
+    base = str(tmp_path / "resumed")
+    report = build_corpus_pipeline(SF_DIR)
+    dedup = report.deps["shuffled"].deps["packed"].deps["mixed"].deps["deduped"]
+    partial = dedup.out_path(base)
+    os.makedirs(os.path.join(partial, "_temporary", "0"))
+    stray = str(tmp_path / "stray")
+    spark.range(3).write.parquet(stray)
+    for f in os.listdir(stray):
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(stray, f), os.path.join(partial, f))
+
+    resumed = run_corpus_pipeline(spark, SF_DIR, base)
+    assert resumed["skipped"] == []
+    for k in ("n_docs", "n_tokens", "n_packs"):
+        assert resumed[k] == clean[k], k
+    got = spark.read.parquet(dedup.out_path(base))
+    want = spark.read.parquet(dedup.out_path(clean_base))
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_epoch_bump_reruns_only_shuffle(spark, tmp_path):
     """A new training epoch = new shuffle param: only the shuffle stage
     (and the ephemeral report) re-run; the curate→pack prefix is reused

@@ -4,28 +4,24 @@ reference's test shape (test_pset.py:131-234) upgraded to value assertions
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import shutil
+import uuid
 
 import pytest
 
-from pb_etl_spark.pipeline import build_graph, run_pipeline
-from pb_etl_spark.schemas import NORM_COLS
+from pb_etl_spark.pipeline import METRICS_FILE, build_graph, run_pipeline
+from pb_etl_spark.plans.stages import StageRunner
+from pb_etl_spark.schemas import KEY_COL, NORM_COLS
 from pb_etl_spark.sources.parquet import dataset_exists, read_parquet
 from tests.fixtures import write_fixtures
 
-
-@pytest.fixture(scope="module")
-def pipeline_run(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("external"))
-    workdir = str(tmp_path_factory.mktemp("workdir"))
-    stats = write_fixtures(root)
-    report, runner = run_pipeline(spark, workdir, root=root, seed=42)
-    return {"root": root, "workdir": workdir, "stats": stats, "report": report, "runner": runner}
+MATERIALIZED = ["load_data", "load_test", "norm_denominators", "fit_model", "predict", "backtest"]
 
 
-def _stage_path(pipeline_run, name: str) -> str:
-    g = build_graph(root=pipeline_run["root"], seed=42)
+def _stages(terminal) -> dict:
     stages = {}
 
     def walk(s):
@@ -33,8 +29,54 @@ def _stage_path(pipeline_run, name: str) -> str:
         for d in s.deps.values():
             walk(d)
 
-    walk(g)
-    return stages[name].out_path(pipeline_run["workdir"])
+    walk(terminal)
+    return stages
+
+
+def _run_job_grouped(spark, workdir: str, terminal) -> tuple[dict, StageRunner, dict]:
+    """Run the DAG with every stage body under its own Spark job group;
+    returns (report, runner, {stage name: Spark jobs it launched})."""
+    sc = spark.sparkContext
+    token = uuid.uuid4().hex[:8]
+    for stage in _stages(terminal).values():
+
+        def grouped(sp, out, deps, body=stage.fn, name=stage.name):
+            sc.setJobGroup(f"{name}-{token}", name)
+            return body(sp, out, deps)
+
+        stage.fn = grouped
+    runner = StageRunner(spark, workdir)
+    try:
+        report = runner.run(terminal)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {n: len(tracker.getJobIdsForGroup(f"{n}-{token}")) for n in _stages(terminal)}
+    return report, runner, jobs
+
+
+@pytest.fixture(scope="module")
+def pipeline_run(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("external"))
+    workdir = str(tmp_path_factory.mktemp("workdir"))
+    stats = write_fixtures(root)
+    report, runner, jobs = _run_job_grouped(spark, workdir, build_graph(root=root, seed=42))
+    return {
+        "root": root, "workdir": workdir, "stats": stats, "report": report,
+        "runner": runner, "jobs": jobs,
+    }
+
+
+def _stage_path(pipeline_run, name: str, workdir: str | None = None) -> str:
+    stage = _stages(build_graph(root=pipeline_run["root"], seed=42))[name]
+    return stage.out_path(workdir or pipeline_run["workdir"])
+
+
+def _predictions(spark, path: str) -> dict:
+    return {r[KEY_COL]: r["Y_hat"] for r in read_parquet(spark, path).collect()}
 
 
 def test_all_stages_materialized(pipeline_run):
@@ -43,8 +85,89 @@ def test_all_stages_materialized(pipeline_run):
         "load_data", "load_test", "norm_denominators", "fit_model",
         "predict", "backtest", "final_results",
     }
-    for name in ["load_data", "load_test", "norm_denominators", "predict", "backtest"]:
+    for name in MATERIALIZED:
         assert dataset_exists(_stage_path(pipeline_run, name)), name
+
+
+def test_model_stages_job_budget(pipeline_run):
+    """fit_model + predict are bound by Spark job scheduling, not data.
+    Every indexer fit and every saved or loaded pipeline stage costs jobs,
+    so one multi-column indexer and a single model write are what keep
+    them near 72 jobs here (one indexer per column and a second write:
+    about 215)."""
+    jobs = pipeline_run["jobs"]
+    assert all(jobs[n] > 0 for n in MATERIALIZED), jobs  # the count works
+    assert jobs["fit_model"] + jobs["predict"] <= 80, jobs
+
+
+def test_fit_model_metrics(pipeline_run):
+    with open(os.path.join(_stage_path(pipeline_run, "fit_model"), METRICS_FILE)) as fh:
+        metrics = json.load(fh)
+    assert metrics["train_rows"] + metrics["val_rows"] == pipeline_run["stats"]["n_train"]
+    assert metrics["iterations"] >= 1
+    assert 0.0 <= metrics["train_auc"] <= 1.0
+
+
+def test_multi_column_indexer_matches_per_column_indexers(spark, pipeline_run, tmp_path):
+    """The one multi-column StringIndexer fits the same labels, and so the
+    same model, as one single-column indexer per categorical."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import StringIndexer
+
+    from pb_etl_spark.ml.pipeline import (
+        _impute_numeric, build_pipeline, save_without_summary, score,
+    )
+    from pb_etl_spark.schemas import CAT_COLS, NUM_COLS
+
+    train = _impute_numeric(
+        read_parquet(spark, _stage_path(pipeline_run, "load_data")), NUM_COLS
+    ).cache()
+    multi = build_pipeline()
+    per_column = Pipeline(
+        stages=[
+            StringIndexer(inputCol=c, outputCol=f"{c}__idx", handleInvalid="keep")
+            for c in CAT_COLS
+        ]
+        + [s.copy() for s in multi.getStages()[1:]]
+    )
+    try:
+        # loaded back without their training summaries, as train_model does
+        m_multi = save_without_summary(multi.fit(train), str(tmp_path / "multi"))
+        m_per = save_without_summary(per_column.fit(train), str(tmp_path / "per"))
+        assert len(m_multi.stages) == 4 and len(m_per.stages) == len(CAT_COLS) + 3
+        assert m_multi.stages[0].labelsArray == [m.labels for m in m_per.stages[: len(CAT_COLS)]]
+        lr_multi, lr_per = m_multi.stages[-1], m_per.stages[-1]
+        assert lr_multi.coefficients.toArray().tolist() == lr_per.coefficients.toArray().tolist()
+        assert lr_multi.intercept == lr_per.intercept
+        got = {r[KEY_COL]: r["Y_hat"] for r in score(m_multi, train).collect()}
+        want = {r[KEY_COL]: r["Y_hat"] for r in score(m_per, train).collect()}
+        assert got == want
+    finally:
+        train.unpersist()
+
+
+def test_resume_over_partial_stage_dirs(spark, pipeline_run, tmp_path):
+    """A run killed mid-write leaves stage directories without _SUCCESS;
+    the rerun replaces them and reproduces the clean run exactly."""
+    workdir = str(tmp_path / "wd")
+    for name in ["load_data", "load_test", "norm_denominators"]:
+        shutil.copytree(_stage_path(pipeline_run, name), _stage_path(pipeline_run, name, workdir))
+    fit = _stage_path(pipeline_run, "fit_model", workdir)
+    os.makedirs(os.path.join(fit, "_temporary", "0"))
+    os.makedirs(os.path.join(fit, "model", "metadata"))
+    # a stray part file a blind append would mix into the predictions
+    predict = _stage_path(pipeline_run, "predict", workdir)
+    shutil.copytree(_stage_path(pipeline_run, "predict"), predict)
+    os.remove(os.path.join(predict, "_SUCCESS"))
+
+    report, runner = run_pipeline(spark, workdir, root=pipeline_run["root"], seed=42)
+    assert set(runner.skipped) == {"load_data", "load_test", "norm_denominators"}
+    assert set(runner.ran) == {"fit_model", "predict", "backtest", "final_results"}
+    assert report == pipeline_run["report"]
+    assert _predictions(spark, predict) == _predictions(spark, _stage_path(pipeline_run, "predict"))
+    assert sorted(os.listdir(workdir)) == sorted(
+        os.path.basename(_stage_path(pipeline_run, n, workdir)) for n in MATERIALIZED
+    )
 
 
 def test_load_data_join(spark, pipeline_run):
